@@ -29,6 +29,7 @@ from scabillmatch_spark.functions import text as TX
 from scabillmatch_spark.io.sources import read_table as _t_impl
 from scabillmatch_spark.operators import blocking, corpus, pairs
 from scabillmatch_spark.plans.bill_match import document_match
+from scabillmatch_spark.session import shared_relation
 from entry_oracles import (  # noqa: F401  (re-exported contract surface)
     DOC_LSH_BANDS, DOC_LSH_HASHES, SHINGLE_LSH_BANDS,
     SHINGLE_LSH_HASHES, _BRP_AND, _BRP_DIST_THRESHOLD,
@@ -987,23 +988,13 @@ def _banded_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SCORED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_relation
 def _scored_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(pk1, pk2, similarity) LSH-banded scored candidates, persisted once
-    per (application, sf_dir): the >=90 near-dup query and the >=95 graph
-    edge build are threshold filters over one scored relation — computing
-    it twice doubled the most expensive join in the bench."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SCORED_CACHE.get(key)
-    if cached is not None:
-        return cached
-    scored = (
-        _banded_doc_pairs(spark, sf_dir).select("pk1", "pk2", "similarity").persist()
-    )
-    _SCORED_CACHE[key] = scored
-    return scored
+    """(pk1, pk2, similarity) LSH-banded scored candidates: the >=90
+    near-dup query and the >=95 graph edge build are threshold filters over
+    one scored relation — computing it twice doubled the most expensive
+    join in the bench."""
+    return _banded_doc_pairs(spark, sf_dir).select("pk1", "pk2", "similarity")
 
 
 def q_doc_near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1352,88 +1343,57 @@ def q_emb_vector_sum_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EDGE_CACHE: dict[tuple[str, float], DataFrame] = {}
+# Jaccard threshold of a similarity-graph edge (near-exact duplicates)
+DOC_EDGE_MIN_JACCARD = 95.0
 
 
-def _doc_edges(spark: SparkSession, sf_dir: str, threshold: float = 95.0) -> DataFrame:
-    """Similarity graph edges: near-exact-dup pairs (Jaccard >= threshold) — the
-    reference's scored-pair relation feeding GraphUtils (GraphUtils.scala:16-22).
-
-    Cached per (session, sf_dir, threshold): the graph queries share one
-    edge materialization (38k rows at sf0.1), itself a cheap filter over
-    the persisted scored-pair relation (_scored_doc_pairs). Keyed by
-    applicationId so a recreated SparkSession never sees a stale DataFrame."""
-    key = (spark.sparkContext.applicationId, sf_dir, threshold)
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    edges = (
+@shared_relation
+def _doc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Similarity graph edges: near-exact-dup pairs (Jaccard >=
+    DOC_EDGE_MIN_JACCARD) — the reference's scored-pair relation feeding
+    GraphUtils (GraphUtils.scala:16-22). The graph queries share this one
+    edge relation (38k rows at sf0.1), itself a cheap filter over the
+    scored-pair relation (_scored_doc_pairs)."""
+    return (
         _scored_doc_pairs(spark, sf_dir)
-        .filter(F.col("similarity") >= threshold)
+        .filter(F.col("similarity") >= DOC_EDGE_MIN_JACCARD)
         .select(F.col("pk1").alias("src"), F.col("pk2").alias("dst"))
-        .persist()
     )
-    _EDGE_CACHE[key] = edges
-    return edges
 
 
-_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_relation
 def _doc_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the >=95 similarity graph, computed ONCE
-    per (session, sf_dir) and persisted — doc_dup_clusters reports them,
-    doc_dedup_rewrite applies them, and a real pipeline materializes the
-    cluster table once for exactly that reason. The iterative CC loop
-    (the expensive part: ~8 pointer-doubling rounds with checkpoints) no
-    longer runs once per consuming query."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CC_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """Connected components over the >=95 similarity graph —
+    doc_dup_clusters reports them, doc_dedup_rewrite applies them, and a
+    real pipeline materializes the cluster table once for exactly that
+    reason. The iterative CC loop (the expensive part: ~8 pointer-doubling
+    rounds with checkpoints) no longer runs once per consuming query."""
     from scabillmatch_spark.operators import graph
 
     # 8 loop partitions: the label frame is ~1.7k vertices / ~38k edges at
     # sf0.1 — per-round shuffles at the 32-partition session default were
     # 20-35% task overhead (A/B in PLANS.md round 6); at cluster scale a
     # caller leaves the default (None = cluster-sized)
-    comp = graph.connected_components(
+    return graph.connected_components(
         _doc_edges(spark, sf_dir), num_shuffle_partitions=8
-    ).persist()
-    _CC_CACHE[key] = comp
-    return comp
+    )
 
 
-_LPA_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_relation
 def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4-round LPA labels over the >=95 similarity graph, computed ONCE
-    per (session, sf_dir) and persisted — the exact sibling of
-    _doc_dup_components: doc_label_propagation reports the labels,
-    graph_cluster_audit joins them against the CC components, and a real
-    pipeline materializes the community table once for the same reason it
-    materializes the cluster table. Before r15 graph_cluster_audit re-ran
-    the identical 4-round loop from scratch (~1.9 s of duplicated
-    iterative work per call at sf0.1).
+    """4-round LPA labels over the >=95 similarity graph — the exact
+    sibling of _doc_dup_components: doc_label_propagation reports the
+    labels, graph_cluster_audit joins them against the CC components, and
+    a real pipeline materializes the community table once for the same
+    reason it materializes the cluster table. Before r15
+    graph_cluster_audit re-ran the identical 4-round loop from scratch
+    (~1.9 s of duplicated iterative work per call at sf0.1)."""
+    from scabillmatch_spark.operators import graph
 
-    Cache contract (r15 ADVICE): entries live for the session — never
-    evicted or unpersisted (one community table per (app, sf_dir), same
-    as _CC_CACHE/_SCORED_CACHE). Consumers receive a cheap select('*')
-    wrapper, not the persisted frame itself, so a consumer-side
-    unpersist() cannot silently drop the shared relation for everyone
-    else."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LPA_CACHE.get(key)
-    if cached is None:
-        from scabillmatch_spark.operators import graph
-
-        # 8 loop partitions: same frame-volume sizing as _doc_dup_components
-        cached = graph.label_propagation(
-            _doc_edges(spark, sf_dir), max_iter=4, num_shuffle_partitions=8
-        ).persist()
-        _LPA_CACHE[key] = cached
-    return cached.select("*")
+    # 8 loop partitions: same frame-volume sizing as _doc_dup_components
+    return graph.label_propagation(
+        _doc_edges(spark, sf_dir), max_iter=4, num_shuffle_partitions=8
+    )
 
 
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2768,12 +2728,12 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     r16 optimization round (guide §5 caching-when-reused): the self-join
     lineage replicates the docs->terms subtree across both pair sides,
     the df table and both norm tables — the before plan held 28 parquet
-    scans of documents, each re-running the regex tokenizer (Catalyst
+    scans, 8 of which read text and re-run the regex tokenizer (Catalyst
     cannot reuse the differently-aliased subtrees). The flat per-call
-    persisted ``terms`` table (doc_id, term, tf) collapses that to ONE
+    persisted ``terms`` table (doc_id, term, tf) collapses those 8 to ONE
     tokenize pass; every replica becomes an InMemoryTableScan of a
     narrow flat frame. A/B (interleaved min-of-3, noop, values asserted
-    identical): 1.99 -> 1.58 s at sf0.1; at scale it converts 28 corpus
+    identical): 1.99 -> 1.58 s at sf0.1; at scale it converts 8 corpus
     text scans into one pass + a token-bounded cached projection.
     (Feeding tok_ids from the session token cache instead was A/B'd and
     REJECTED: 3.74 s — repeated cached-ARRAY deserialization per replica
@@ -3034,33 +2994,17 @@ def q_emb_arrow_block_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMB_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_relation
 def _emb_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact embedding near-dup pair relation (id1, id2, cos_sim),
-    persisted once per (application, sf_dir) — r15 optimization round:
-    q_emb_cosine_near_dup and q_emb_semantic_dedup consumed the SAME
-    cascade (signature kernel + band join + Hamming + exact cosine) yet
-    each call rebuilt it from parquet, exactly the double-build
-    _SCORED_CACHE killed for the text side in r5. Same contract as the
-    other shared relations: one persisted build per session, every
-    consumer is a filter/graph pass over it, bench pre-warms it so
-    per-query numbers measure the consumers' plans, not build order.
-
-    Cache contract (r15 ADVICE): entries live for the session — never
-    evicted or unpersisted. Consumers receive a cheap select('*')
-    wrapper, not the persisted frame itself, so a consumer-side
-    unpersist() cannot silently drop the shared relation for everyone
-    else."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EMB_PAIRS_CACHE.get(key)
-    if cached is None:
-        cached = _emb_near_dup_pairs(
-            spark, sf_dir, max(8, spark.sparkContext.defaultParallelism // 4)
-        ).persist()
-        _EMB_PAIRS_CACHE[key] = cached
-    return cached.select("*")
+    """The exact embedding near-dup pair relation (id1, id2, cos_sim) —
+    r15 optimization round: q_emb_cosine_near_dup and q_emb_semantic_dedup
+    consumed the SAME cascade (signature kernel + band join + Hamming +
+    exact cosine) yet each call rebuilt it from parquet, exactly the
+    double-build _scored_doc_pairs removed for the text side in r5. Every
+    consumer is a filter/graph pass over it."""
+    return _emb_near_dup_pairs(
+        spark, sf_dir, max(8, spark.sparkContext.defaultParallelism // 4)
+    )
 
 
 def q_emb_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4187,35 +4131,27 @@ def q_io_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_SHINGLE_BANDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_relation
 def _shingle_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full-corpus shingle BAND-INDEX projection under the registered
     banding config (SHINGLE_LSH_HASHES/BANDS over 3-gram shingle ids from
-    the corpus cache), persisted once per (application, sf_dir) — the
-    materialize-once band-index table of the 100 TB ingest story, shared
-    across every shingle-dedup consumer the way _SCORED_CACHE shares the
-    scored-pair relation. Banding is a pure per-doc function of the
-    shingle set, so any subset consumer (delta/corpus splits) slices this
-    frame by id instead of re-running the num_hashes MinHash passes:
-    band(full).filter(pred) is row-identical to band(subset)."""
+    the corpus cache) — the materialize-once band-index table of the
+    100 TB ingest story, shared across every shingle-dedup consumer the way
+    _scored_doc_pairs shares the scored-pair relation. Banding is a pure
+    per-doc function of the shingle set, so any subset consumer
+    (delta/corpus splits) slices this frame by id instead of re-running the
+    num_hashes MinHash passes: band(full).filter(pred) is row-identical to
+    band(subset)."""
     from scabillmatch_spark.operators import blocking, corpus
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_BANDS_CACHE.get(key)
-    if cached is not None:
-        return cached
     sets = corpus.doc_token_sets(spark, sf_dir).select(
         F.col("doc").alias("doc_id"),
         TX.ngram_ids_from_token_ids(F.col("tok_ids"), 3).alias("shingles"),
     )
-    banded = blocking.lsh_banded_projection(
+    return blocking.lsh_banded_projection(
         sets, "doc_id", "shingles",
         SHINGLE_LSH_HASHES, SHINGLE_LSH_BANDS, with_size=True, tag="r",
-    ).persist()
-    _SHINGLE_BANDS_CACHE[key] = banded
-    return banded
+    )
 
 
 def q_minhash_delta_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from scabillmatch_spark.plans.bill_match import document_match
-from scabillmatch_spark.session import get_spark
+from scabillmatch_spark.session import SHARED_RELATIONS, get_spark
 
 
 def main() -> None:
@@ -69,54 +69,20 @@ def main() -> None:
         print(f"# stream warmup skipped: {e}", file=sys.stderr)
     warmup_base = round(time.perf_counter() - t0, 1)
     print(f"# warmup: {warmup_base}s", file=sys.stderr)
-    # Pre-warm the shared scored-pair and edge caches (round-5 verdict item
-    # #3): doc_near_dup_jaccard and the graph_* queries read
-    # _SCORED_CACHE/_EDGE_CACHE — without this, whichever of them ran FIRST
-    # paid the one-time banded-join build, so their per-query numbers
-    # measured registry ORDER, not their plans (r4->r5: doc_near_dup_jaccard
-    # 0.30s -> 2.23s from a registry reorder alone). The build cost is now
-    # its own visible line instead.
-    # r16 (VERDICT r15 #2 + ADVICE): each shared-relation build is timed
-    # as its OWN stderr line, and the total warmup cost is surfaced as
-    # `warmup_sec` in the one-line JSON — the pre-warm keeps per-query
-    # numbers order-independent, but the one-time build cost it absorbs
-    # (the emb cascade + 4-round LPA moved here in r15) must stay an
-    # auditable line item for cross-round headline comparability.
+    # Build every shared relation before timing, so a consumer's row
+    # measures its own plan rather than whether it ran first in registry
+    # order. Each build is its own stderr line and counts toward warmup_sec;
+    # a row that only reads a relation (emb_cosine_near_dup) times the
+    # cached readback, and the build's cost is its warmup_cache line.
     cache_warm: dict[str, float] = {}
-
-    def warm(name, df_fn):
+    t0 = time.perf_counter()
+    for name, relation in SHARED_RELATIONS.items():
         t = time.perf_counter()
-        df_fn().count()
+        relation(spark, sf_dir).count()
         cache_warm[name] = round(time.perf_counter() - t, 3)
         print(f"# warmup_cache {name}: {cache_warm[name]}s", file=sys.stderr)
-
-    t0 = time.perf_counter()
-    warm("scored_doc_pairs", lambda: entrymod._scored_doc_pairs(spark, sf_dir))
-    warm("doc_edges", lambda: entrymod._doc_edges(spark, sf_dir))
-    # the CC cluster table too (r7): doc_dup_clusters reports it and
-    # doc_dedup_rewrite applies it — without pre-warm, whichever ran first
-    # would be charged the iterative CC build
-    warm("doc_dup_components", lambda: entrymod._doc_dup_components(spark, sf_dir))
-    # and the shared shingle band index (r12 s3): the lsh/delta/ingest
-    # dedup family slices it — same order-independence rationale
-    warm("shingle_bands", lambda: entrymod._shingle_bands(spark, sf_dir))
-    # and the shared embedding near-dup pair relation (r15 optimization
-    # round): emb_cosine_near_dup and emb_semantic_dedup both consume it —
-    # without the pre-warm, whichever ran FIRST was charged the one-time
-    # cascade build (signature kernel + band join + rescore), measuring
-    # registry order instead of its plan — the same rationale as the
-    # scored/edge/CC pre-warms above. NOTE (r15 ADVICE, declared): with
-    # the cache warm, the emb_cosine_near_dup row itself measures cache
-    # readback — the cascade's cost is THIS line + the consumers' rows.
-    warm("emb_pairs_shared", lambda: entrymod._emb_pairs_shared(spark, sf_dir))
-    # and the shared LPA label relation (r15 optimization round):
-    # doc_label_propagation reports it and graph_cluster_audit joins it
-    # against the CC components — same order-independence rationale as the
-    # CC pre-warm right above (the two queries previously each ran the
-    # identical 4-round loop)
-    warm("lpa_labels", lambda: entrymod._lpa_labels(spark, sf_dir))
     warmup_caches = round(time.perf_counter() - t0, 1)
-    print(f"# warmup_scored_edge_cc_caches: {warmup_caches}s", file=sys.stderr)
+    print(f"# warmup_shared_relations: {warmup_caches}s", file=sys.stderr)
     warmup_sec = round(warmup_base + warmup_caches, 2)
 
     # Host-phase calibration probe (r7 verdict #5): a FIXED pure-codegen

@@ -56,6 +56,18 @@ def token_set(col: Column | str) -> Column:
     return F.array_sort(F.array_distinct(tokens(col)))
 
 
+def _bind(col: Column, body) -> Column:
+    """``body(col)`` with ``col`` evaluated once per row.
+
+    A Column read inside a higher-order lambda is re-evaluated on every
+    lambda call: ``slice(tokens(text), i, n)`` inside ``transform`` re-runs
+    the tokenizer and md5 for every window, O(L^2) per document. Binding
+    ``col`` as the variable of a one-element ``transform`` evaluates it
+    once; ``body`` then reads only the variable.
+    """
+    return F.transform(F.array(col), body)[0]
+
+
 def ngrams(token_col: Column, n: int) -> Column:
     """Contiguous word n-grams joined by spaces (pyspark.ml NGram semantics).
 
@@ -63,10 +75,14 @@ def ngrams(token_col: Column, n: int) -> Column:
     arrays shorter than ``n`` yield an empty array (Spark's ``sequence`` would
     otherwise produce a descending range).
     """
-    size = F.size(token_col)
-    idx = F.sequence(F.lit(1), size - F.lit(n - 1))
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(token_col, i, n), " "))
-    return F.when(size >= n, grams).otherwise(F.array().cast("array<string>"))
+
+    def body(toks: Column) -> Column:
+        size = F.size(toks)
+        idx = F.sequence(F.lit(1), size - F.lit(n - 1))
+        grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
+        return F.when(size >= n, grams).otherwise(F.array().cast("array<string>"))
+
+    return _bind(token_col, body)
 
 
 def ngram_set(col: Column | str, n: int) -> Column:
@@ -131,18 +147,22 @@ def ngram_ids_from_token_ids(tok_ids_col: Column, n: int) -> Column:
     shingle ids, which cost one digest + two string allocations per shingle
     — the measured dominant cost of the MinHash dedup plan.
     """
-    size = F.size(tok_ids_col)
-    idx = F.sequence(F.lit(1), size - F.lit(n - 1))
-    gram = F.transform(
-        idx,
-        lambda i: F.aggregate(
-            F.slice(tok_ids_col, i, n),
-            F.lit(0).cast("long"),
-            lambda acc, x: (acc * SHINGLE_B + x % HASH_PRIME) % HASH_PRIME,
-        ),
-    )
-    grams = F.when(size >= n, gram).otherwise(F.array().cast("array<long>"))
-    return F.array_sort(F.array_distinct(grams))
+
+    def body(tok_ids: Column) -> Column:
+        size = F.size(tok_ids)
+        idx = F.sequence(F.lit(1), size - F.lit(n - 1))
+        gram = F.transform(
+            idx,
+            lambda i: F.aggregate(
+                F.slice(tok_ids, i, n),
+                F.lit(0).cast("long"),
+                lambda acc, x: (acc * SHINGLE_B + x % HASH_PRIME) % HASH_PRIME,
+            ),
+        )
+        grams = F.when(size >= n, gram).otherwise(F.array().cast("array<long>"))
+        return F.array_sort(F.array_distinct(grams))
+
+    return _bind(tok_ids_col, body)
 
 
 def ngram_id_set(col: Column | str, n: int) -> Column:

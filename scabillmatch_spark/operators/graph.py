@@ -67,6 +67,10 @@ def pagerank(
     Each call claims its own run_<uuid> namespace inside it (concurrent or
     repeated calls never clobber each other); the final round's files
     outlive the call — the caller deletes run_* after consuming the result.
+
+    ``verts`` and ``e_w`` are persisted for the loop and released before
+    returning whenever the returned ranks are already materialized (a cut
+    ends the loop); a lazy tail still reads them, so they stay persisted.
     """
     e = undirect(edges) if undirected else edges.select("src", "dst")
     verts = vertices_from_edges(e).cache()
@@ -109,6 +113,11 @@ def pagerank(
             # tail: there the cluster default is the right width and the
             # caller decides where to cut.
             ranks = ranks.localCheckpoint()
+        if max_iter > 0 and (
+            max_iter % CHECKPOINT_EVERY == 0 or num_shuffle_partitions is not None
+        ):
+            verts.unpersist()
+            e_w.unpersist()
     return ranks.select("id", F.col("rank").alias("pagerank"))
 
 

@@ -1,4 +1,5 @@
-"""SparkSession factory.
+"""SparkSession factory, and the registry of relations shared across queries
+within one application (:func:`shared_relation`).
 
 Scale notes: AQE on (coalesce partitions + skew-join) replaces the
 reference's hand-tuned ``repartition(4*count/1000)`` heuristics
@@ -9,9 +10,12 @@ cluster leave them high and let AQE coalesce.
 
 from __future__ import annotations
 
+import functools
 import os
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 # Default driver heap. 16g thrashed GC once the shared caches (corpus token
@@ -28,6 +32,8 @@ from pyspark.sql import SparkSession
 # not driver sizing.
 DEFAULT_DRIVER_MEMORY_MIB = 48 * 1024
 HOST_MEMORY_FRACTION = 0.6
+# Default local[N] width; more cores than the host has only adds contention.
+DEFAULT_CPUS = 32
 
 
 def _host_memory_bytes() -> int | None:
@@ -53,6 +59,15 @@ def driver_memory() -> str:
     return "48g" if mib == DEFAULT_DRIVER_MEMORY_MIB else f"{mib}m"
 
 
+def local_cpus() -> int:
+    """Local-mode core count for :func:`get_spark`: ``$SPARK_GRAFT_CPUS``
+    when set, else ``DEFAULT_CPUS`` capped at the host's core count."""
+    explicit = os.environ.get("SPARK_GRAFT_CPUS")
+    if explicit:
+        return int(explicit)
+    return min(DEFAULT_CPUS, os.cpu_count() or DEFAULT_CPUS)
+
+
 def get_spark(
     app_name: str = "scabillmatch_spark",
     master: str | None = None,
@@ -65,9 +80,9 @@ def get_spark(
     skew-join splitting; on a 1000-executor cluster the same code runs
     unchanged with a higher initial ``spark.sql.shuffle.partitions``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus)
+    shuffle_partitions = shuffle_partitions or cpus
 
     builder = (
         SparkSession.builder.master(master)
@@ -96,3 +111,53 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# --- shared relations --------------------------------------------------------
+
+SHARED_RELATIONS: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+_persisted: dict[tuple[str, str], DataFrame] = {}
+_application: str | None = None
+
+
+def shared_relation(
+    build: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Register ``build(spark, sf_dir)`` as a shared relation: an expensive
+    projection that several queries read, built once and reused, as the
+    reference saves its featurized corpus once and reuses it across jobs
+    (ExtractCandidates.scala:148-156).
+
+    The returned accessor keeps ``build``'s name and ``(spark, sf_dir)``
+    signature. It is added to ``SHARED_RELATIONS`` in definition order,
+    under its name without leading underscores. The one cache contract:
+
+    - ``build`` runs once per (application, name, sf_dir). Its result is
+      persisted and lives until the application ends; nothing evicts it.
+    - Every caller gets a ``filter(lit(True))`` wrapper over the persisted
+      frame, so a caller's ``unpersist()`` cannot drop the shared relation
+      for the callers after it. The optimizer removes the filter, so the
+      caller's plan reads the cached relation unchanged. A projection
+      wrapper such as ``select("*")`` does not protect it: on Spark 4.1
+      ``unpersist()`` of a projection over a cached plan finds and drops
+      the cached plan itself.
+    - The first call under a new SparkContext application drops the
+      previous application's entries: their frames belong to a stopped
+      context and cannot be read.
+    """
+    name = build.__name__.lstrip("_")
+
+    @functools.wraps(build)
+    def accessor(spark: SparkSession, sf_dir: str) -> DataFrame:
+        global _application
+        app = spark.sparkContext.applicationId
+        if app != _application:
+            _persisted.clear()
+            _application = app
+        frame = _persisted.get((name, sf_dir))
+        if frame is None:
+            frame = _persisted[(name, sf_dir)] = build(spark, sf_dir).persist()
+        return frame.filter(F.lit(True))
+
+    SHARED_RELATIONS[name] = accessor
+    return accessor

@@ -50,6 +50,21 @@ TOUCHED_SINCE_LAST_ROUND = {
     "graph_pagerank",                # plan-gate coverage re-added
     "doc_lm_perplexity",             # single-pass sentinel-pair LM training
     "tfidf_cosine_pairs",            # per-call persisted flat terms table
+    # one shared-relation registry (session.shared_relation) now hands
+    # every consumer a wrapper over the persisted relation
+    "doc_near_dup_jaccard",          # scored doc pairs
+    "minhash_lsh_dedup",             # token sets + shingle band index
+    "doc_dup_clusters",              # CC components
+    "graph_triangle_count",          # doc edges
+    "graph_shortest_paths",          # doc edges
+    "graph_weighted_paths",          # doc edges
+    "graph_kcore",                   # doc edges
+    "pairs_postprocess_sample",      # scored doc pairs
+    "doc_decontaminate",             # token sets
+    "graph_open_triangles",          # doc edges
+    "doc_curation_pipeline",         # token sets
+    "doc_pair_measures",             # token sets
+    "doc_fingerprint",               # n-gram input bound once
 }
 
 

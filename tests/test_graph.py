@@ -20,6 +20,28 @@ def test_triangles(square_graph):
     assert graph.triangle_count(square_graph).first().n_triangles == 2
 
 
+@pytest.mark.parametrize(
+    "max_iter, num_shuffle_partitions",
+    [(3, 2), (5, None)],  # localCheckpoint tail; a final round cut
+)
+def test_pagerank_leaves_only_the_returned_cut_persisted(
+    spark, max_iter, num_shuffle_partitions
+):
+    # a graph of its own per case: a frame equal to one cached earlier
+    # would reuse that cache entry and hide what this call leaves behind
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 10 + max_iter)], ["src", "dst"]
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    ranks = graph.pagerank(
+        edges, max_iter=max_iter, num_shuffle_partitions=num_shuffle_partitions
+    )
+    left = set(jsc.getPersistentRDDs().keySet()) - before
+    assert len(left) == 1  # the cut the ranks read; verts and e_w released
+    assert abs(sum(r.pagerank for r in ranks.collect()) - 1.0) < 1e-6
+
+
 def test_shortest_paths(square_graph):
     d = {r.id: r.distance for r in graph.shortest_paths(square_graph, 2).collect()}
     assert d == {2: 0, 1: 1, 3: 1, 4: 2}

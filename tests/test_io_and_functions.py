@@ -114,6 +114,35 @@ def test_whole_text(spark, tmp_path):
     assert rows == {"a.txt": "line1\nline2", "b.txt": "other"}
 
 
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_ngram_helpers_evaluate_their_input_once(spark, bills):
+    """An expression passed to the n-gram helpers runs once per row, not
+    once per window: the fused form equals the projected form and its
+    optimized plan holds one md5 / one tokenizer regex."""
+    from scabillmatch_spark.functions import text as TX
+
+    docs = bills.select("primary_key", "content")
+    fused = docs.select(
+        "primary_key",
+        TX.ngram_ids_from_token_ids(TX.ordered_token_ids("content"), 3).alias("g"),
+    )
+    projected = docs.select(
+        "primary_key", TX.ordered_token_ids("content").alias("t")
+    ).select("primary_key", TX.ngram_ids_from_token_ids(F.col("t"), 3).alias("g"))
+    assert sorted(fused.collect()) == sorted(projected.collect())
+    assert _optimized_plan(fused).count("md5(") == 1
+
+    words = docs.select("primary_key", TX.ngram_set("content", 2).alias("g"))
+    tokens = docs.select("primary_key", TX.tokens("content").alias("t")).select(
+        "primary_key", F.array_sort(F.array_distinct(TX.ngrams(F.col("t"), 2))).alias("g")
+    )
+    assert sorted(words.collect()) == sorted(tokens.collect())
+    assert _optimized_plan(words).count("regexp_replace(") == 1
+
+
 def test_stemmer_column(spark):
     from scabillmatch_spark.ml.featurize import _stem_column
 

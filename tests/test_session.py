@@ -1,4 +1,5 @@
-"""Default driver heap sizing in ``session.driver_memory``; starts no Spark."""
+"""Default session sizing in ``session.driver_memory`` and
+``session.local_cpus``; starts no Spark."""
 
 from __future__ import annotations
 
@@ -41,3 +42,16 @@ def test_explicit_driver_memory_is_used_as_given(monkeypatch):
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
     monkeypatch.setattr(session, "_host_memory_bytes", lambda: 1 * GIB)
     assert session.driver_memory() == "3g"
+
+
+@pytest.mark.parametrize("host_cpus, expected", [(64, 32), (32, 32), (4, 4), (None, 32)])
+def test_default_cpus_is_32_capped_by_host_cores(monkeypatch, host_cpus, expected):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "cpu_count", lambda: host_cpus)
+    assert session.local_cpus() == expected
+
+
+def test_explicit_cpus_are_used_as_given(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "48")
+    monkeypatch.setattr(os, "cpu_count", lambda: 4)
+    assert session.local_cpus() == 48
