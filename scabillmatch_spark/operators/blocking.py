@@ -32,20 +32,23 @@ def length_ratio_ok(l1: Column, l2: Column, threshold: float = 0.26) -> Column:
     return F.abs(l1 - l2) / F.sqrt(l1 * l2) < threshold
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Self-join probe sides must not be single-partition: a small parquet
     file scans as ONE split, and a broadcast join keeps the probe side's
     partitioning — every pair similarity would then evaluate on one core.
     One cheap round-robin shuffle of the (small) doc side unlocks full
     parallelism; at real scale the input already has enough splits and this
-    is a no-op."""
+    is a no-op.
+
+    Warning: the ``.rdd`` probe plans ``df`` with AQE, which runs every
+    exchange under it in a throwaway query. Pass a frame whose exchanges
+    are already materialized (a checkpoint, a cached relation) or have
+    none; over an aggregate of token arrays this cost the flagship a stage
+    and 1.0 MB of shuffle per call."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-ensure_parallelism = _ensure_parallelism  # public alias for callers outside the module
 
 
 def candidate_pairs(
@@ -74,7 +77,7 @@ def candidate_pairs(
             "no block_col: this is an O(N^2) cartesian join; pass "
             "allow_cartesian=True only for small inputs or per-block use"
         )
-    df = _ensure_parallelism(df)
+    df = ensure_parallelism(df)
     a = df.alias("a")
     b = df.alias("b")
     cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
@@ -193,35 +196,34 @@ def collapse_token_sets(
     """Representative collapse for dup-heavy corpora: group documents by the
     md5 of their (sorted-distinct) element set and return
 
-      reps    — one row per distinct set: (``id_col`` = min member id,
-                ``set_col``, __set_id), the only rows that need banding
-                and pairwise scoring;
+      reps    — the min-id member's row of ``df`` plus __set_id, one per
+                distinct set: the only rows that need banding and scoring;
       members — (__set_id, ``id_col``) for the lossless expansion back to
                 document pairs.
 
-    Any set-based measure m satisfies m(A, C) = m(B, C) whenever A and B
-    hold the same set, and identical sets produce identical MinHash bands,
-    so banding + scoring representatives and then expanding (cross-group
-    pairs via two member joins, intra-group pairs at similarity 100) yields
-    EXACTLY the pairs-and-scores of banding every document — with the
-    quadratic stage shrunk by the duplication factor squared. Real
-    pretraining corpora are 20-50% exact-dup; scoring them pairwise first
-    is pure waste.
+    Identical sets band identically and score identically against any third
+    set, so banding + scoring representatives and then expanding
+    (cross-group pairs via two member joins, intra-group pairs at
+    similarity 100) yields EXACTLY the pairs-and-scores of banding every
+    document, with the quadratic stage shrunk by the duplication factor
+    squared (real pretraining corpora are 20-50% exact-dup).
 
-    Empty sets are EXCLUDED: jaccard(∅, X) = 0 for every X (including ∅),
-    so an empty-set doc can never reach any positive similarity threshold —
-    but the intra-group expansion would wrongly stamp two empty-set docs
-    as similarity 100. Valid for thresholded consumers (threshold > 0),
-    which is every caller here.
+    Empty sets are EXCLUDED: jaccard(∅, X) = 0 for every X, so an empty-set
+    doc never reaches a positive threshold, but the intra-group expansion
+    would stamp two of them 100. Valid for thresholded consumers (every
+    caller here).
 
-    Set identity is type-aware: numeric element arrays digest with
-    md5(concat_ws(',')) — collision-free there because numerals can't
-    contain the delimiter — while string arrays use md5(to_json(set)),
-    whose JSON escaping keeps {'a,b'} distinct from {'a','b'} (a plain
-    concat digest would merge them and wrongly stamp similarity 100 on
-    expansion). concat_ws is the fast path: to_json costs ~2x on the
-    one-time digest pass (measured on the 50k-doc flagship), and every
-    current caller passes bigint token-id arrays.
+    Set identity is type-aware: numeric arrays digest md5(concat_ws(',')),
+    collision-free since numerals hold no comma; string arrays use
+    md5(to_json(set)), whose escaping keeps {'a,b'} apart from {'a','b'}
+    (to_json costs ~2x on the digest pass, measured on the 50k-doc flagship).
+
+    Representatives come from a semi-join on the min member id: only
+    (__set_id, id) rows cross an exchange, and ``reps`` keeps ``df``'s
+    partitioning. A ``first(set_col)`` aggregate would shuffle every array,
+    once per consumer: on pyspark 4.1.2 AQE reuses no exchange above a
+    persisted input, and ``persist()`` adds a cache-build stage. Callers
+    reading ``reps`` twice ``localCheckpoint(eager=False)`` it (no stage).
     """
     elem_type = df.schema[set_col].dataType.elementType.typeName()
     digest = (
@@ -233,15 +235,10 @@ def collapse_token_sets(
         "__set_id", digest
     )
     members = tagged.select("__set_id", id_col)
-    others = [c for c in df.columns if c not in (id_col, set_col)]
-    # non-set columns take an arbitrary member's value — pass them through
-    # only when they are set-determined or unused downstream (a per-pair
-    # predicate on such a column must instead be applied after expansion)
-    reps = tagged.groupBy("__set_id").agg(
-        F.min(id_col).alias(id_col),
-        F.first(set_col).alias(set_col),
-        *[F.first(c).alias(c) for c in others],
-    )
+    # non-set columns are the min-id member's: a per-pair predicate on one
+    # that is not set-determined must be applied after expansion
+    first_ids = members.groupBy("__set_id").agg(F.min(id_col).alias(id_col))
+    reps = tagged.join(first_ids, ["__set_id", id_col], "left_semi")
     return reps, members
 
 
@@ -334,7 +331,7 @@ def lsh_candidate_pairs(
             )
     else:
         rows_per_band = num_hashes // num_bands
-        df = _ensure_parallelism(df)
+        df = ensure_parallelism(df)
         keep = [id_col] + ([group_col] if group_col else [])
         sz = [F.size(F.col(set_col)).alias("__sz")] if min_jaccard is not None else []
         sig = df.select(
@@ -345,10 +342,10 @@ def lsh_candidate_pairs(
             *([F.col("__sz")] if min_jaccard is not None else []),
             F.explode(TX.minhash_bands(F.col("__sig"), num_bands, rows_per_band)).alias("__band"),
         )
-        # both self-join sides read this projection; persisting it computes
-        # the num_hashes minhash passes ONCE instead of once per side (the
-        # banded rows are tiny: num_bands short strings per doc)
-        banded = banded.persist()
+        # both self-join sides read this projection: a local checkpoint
+        # computes the num_hashes minhash passes ONCE, and unlike persist()
+        # adds no cache-build stage and no cache entry (pyspark 4.1.2)
+        banded = banded.localCheckpoint(eager=False)
     a, b = banded.alias("a"), banded.alias("b")
     cond = (F.col("a.__band") == F.col("b.__band")) & (
         F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
@@ -387,7 +384,7 @@ def lsh_banded_projection(
     ``with_size=True`` whenever the join will use a ``min_jaccard``
     prune)."""
     rows_per_band = num_hashes // num_bands
-    df = _ensure_parallelism(df)
+    df = ensure_parallelism(df)
     sz = [F.size(F.col(set_col)).alias(f"__sz_{tag}")] if with_size else []
     sig = df.select(
         F.col(id_col).alias(f"__id_{tag}"),

@@ -78,6 +78,8 @@ def match_token_sets(
     reps, members = blocking.collapse_token_sets(
         docs, id_col="primary_key", set_col="tokens"
     )
+    # read by the band join and both score sides; see collapse_token_sets
+    reps = reps.localCheckpoint(eager=False)
     cands = blocking.lsh_candidate_pairs(
         reps, id_col="__set_id", set_col="tokens",
         num_hashes=num_hashes, num_bands=num_bands,

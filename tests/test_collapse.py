@@ -11,17 +11,20 @@ from scabillmatch_spark.operators import blocking, pairs
 
 
 def _docs(spark):
+    # listed out of id order, so the min-id member is not the first row seen
     rows = [
+        (4, [10, 20, 30, 40]),   # exact dup of 1
+        (3, [10, 20, 30, 41]),   # near-dup of 1/2/4
+        (2, [10, 20, 30, 40]),   # another exact dup
         (1, [10, 20, 30, 40]),
-        (2, [10, 20, 30, 40]),   # exact dup of 1
-        (3, [10, 20, 30, 41]),   # near-dup of 1/2
-        (4, [10, 20, 30, 40]),   # another exact dup
-        (5, [99, 98, 97]),       # unrelated
         (6, [99, 98, 97]),       # dup of 5
+        (5, [99, 98, 97]),       # unrelated to 1-4
         (7, [50]),               # singleton
     ]
+    # tag: a pass-through column that is not set-determined
     return spark.createDataFrame(
-        [(i, sorted(s)) for i, s in rows], "pk long, toks array<long>"
+        [(i, sorted(s), f"d{i}") for i, s in rows],
+        "pk long, toks array<long>, tag string",
     )
 
 
@@ -90,3 +93,30 @@ def test_collapse_shrinks_quadratic_side(spark):
     reps, members = blocking.collapse_token_sets(docs, id_col="pk", set_col="toks")
     assert reps.count() == 4   # 4 distinct sets among 7 docs
     assert members.count() == 7
+
+
+def test_reps_carry_min_id_members_row(spark):
+    docs = _docs(spark)
+    reps, _ = blocking.collapse_token_sets(docs, id_col="pk", set_col="toks")
+    got = sorted((r["pk"], r["tag"]) for r in reps.collect())
+    assert got == [(1, "d1"), (3, "d3"), (5, "d5"), (7, "d7")]
+
+
+def test_semi_join_reps_equal_the_groupby_form(spark):
+    """The (__set_id, id, set) rows and members match the earlier
+    groupBy(__set_id).agg(min(id), first(set)) formulation."""
+    docs = _docs(spark)
+    reps, members = blocking.collapse_token_sets(docs, id_col="pk", set_col="toks")
+    tagged = docs.filter(F.size("toks") > 0).withColumn(
+        "__set_id", F.md5(F.concat_ws(",", "toks"))
+    )
+    old_reps = tagged.groupBy("__set_id").agg(
+        F.min("pk").alias("pk"), F.first("toks").alias("toks")
+    )
+    cols = ["__set_id", "pk", "toks"]
+    assert sorted(map(tuple, reps.select(*cols).collect())) == sorted(
+        map(tuple, old_reps.select(*cols).collect())
+    )
+    assert sorted(map(tuple, members.collect())) == sorted(
+        map(tuple, tagged.select("__set_id", "pk").collect())
+    )

@@ -45,6 +45,55 @@ def test_flagship_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _executed_nodes(plan) -> list:
+    """Every node of an executed physical plan: AQE wrappers and query
+    stages are followed into what they ran, cached relations are not (a
+    persisted frame's own plan ran when it was built, not in this query)."""
+    name = plan.nodeName()
+    if name.startswith("AdaptiveSparkPlan"):
+        kids = [plan.executedPlan()]
+    elif "QueryStage" in name:
+        kids = [plan.plan()]
+    else:
+        it = plan.children().iterator()
+        kids = []
+        while it.hasNext():
+            kids.append(it.next())
+    return [plan] + [n for k in kids for n in _executed_nodes(k)]
+
+
+def _attrs(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def test_flagship_shuffles_no_token_arrays(spark):
+    """The representative collapse moves only (digest, id) rows through a
+    shuffle and reads each distinct token set where it is stored: no shuffle
+    Exchange outputs an array, no SortAggregate (the plan of first(array))
+    runs, and the shared token-set relation is the only cached input."""
+    from scabillmatch_spark.operators import corpus
+    from scabillmatch_spark.plans.bill_match import document_match
+
+    df = document_match(spark, SF)
+    df.collect()
+    nodes = _executed_nodes(df._jdf.queryExecution().executedPlan())
+    names = [n.nodeName() for n in nodes]
+    assert "SortAggregate" not in names
+    exchanges = [n for n in nodes if n.nodeName() == "Exchange"]
+    assert exchanges, names
+    for ex in exchanges:
+        arrays = [
+            a.name() for a in _attrs(ex.output())
+            if a.dataType().typeName() == "array"
+        ]
+        assert not arrays, f"shuffle Exchange ships array column(s) {arrays}"
+    cached = {
+        tuple(a.name() for a in _attrs(n.relation().output()))
+        for n in nodes if n.nodeName() == "InMemoryTableScan"
+    }
+    assert cached == {tuple(corpus.doc_token_sets(spark, SF).columns)}
+
+
 def test_near_dup_band_join_is_hash_join(spark):
     df = entrymod.queries()["doc_near_dup_jaccard"](spark, SF)
     plan = _formatted(df)
